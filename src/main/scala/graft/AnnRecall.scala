@@ -3,8 +3,6 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.functions.GraftFunctions
-
 /** Driver-visible recall artifact for the ANN/sketch fast paths (the
   * rows-only queries of the correctness gate): each approximate route's
   * result at sf0.1 scored against the EXACT brute-force answer on the
@@ -37,7 +35,6 @@ object AnnRecall {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = GraftSession.localBuilder(cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    GraftFunctions.register(spark)
 
     val emb = io.Tables.embeddings(spark, sfDir).cache()
     val n = emb.count()

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.functions.GraftExtensions
+
 /** The ONE documented production session profile — every graft main
   * (Bench, Verify, Stress*, AnnRecall, KlineScale) builds through here,
   * and a library user on a real cluster applies [[tuned]] to their own
@@ -31,6 +33,10 @@ import org.apache.spark.sql.SparkSession
   *  - `spark.sql.session.timeZone = UTC` — the reference pipeline's
   *    contract (epoch-ms kline timestamps; see graft.Etl): every
   *    date_format/window boundary is UTC-stable regardless of box TZ.
+  *
+  *  - the graft_* native functions ([[graft.functions.GraftExtensions]]),
+  *    installed once at session creation; the operators that call them
+  *    (Similarity, Ivf, TextAnalysis) need no per-call setup.
   */
 object GraftSession {
 
@@ -38,11 +44,10 @@ object GraftSession {
     * entry point — pass the cluster's total core count).
     */
   def tuned(b: SparkSession.Builder, cores: Int): SparkSession.Builder =
-    b.config("spark.sql.shuffle.partitions", cores.toString)
-      // SPARK_GRAFT_INIT_PARTS overrides the 8x default (diagnostics /
-      // unusual topologies); the profile itself stays one source of truth.
+    b.withExtensions(new GraftExtensions)
+      .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_INIT_PARTS", (cores * 8).toString))
+        (cores * 8).toString)
       .config("spark.sql.session.timeZone", "UTC")
       // r18-opt: the generated-class cache (STATIC conf, default 100
       // entries) thrashes on a session that plans the full 215-query
@@ -53,8 +58,7 @@ object GraftSession {
       // long-lived session running a large query mix wants the same.
       // Scale-neutral: per-core behavior is untouched (the driver's
       // low-core scaling runs compile the same classes either way).
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
 
   /** The local[n] form every graft main uses (UI off — these are
     * headless batch runs).

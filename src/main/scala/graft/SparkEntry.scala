@@ -26,8 +26,7 @@ object SparkEntry {
     * /tmp directory per invocation — and the ann_probe entry can time a
     * PROBE against a layout ann_lsh already built.
     */
-  private val scratchDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val scratchDirs = scala.collection.mutable.HashMap.empty[String, String]
 
   private def rmrf(root: java.nio.file.Path): Unit = {
     import scala.jdk.CollectionConverters._
@@ -45,12 +44,23 @@ object SparkEntry {
     base.toString
   }
 
-  private def scratch(kind: String, d: String)(build: String => Unit): String =
-    scratchDirs.computeIfAbsent(s"$kind|$d", _ => {
-      val path = cleanedTempDir(kind) + s"/$kind"
-      build(path)
-      path
-    })
+  /** The artifact dir for (kind, sfDir), built by `build` on first use.
+    * A build may itself call `scratch` for the artifact it reads (the
+    * bounds, minhash-pairs and ngram-labels chains do): the map is
+    * touched only before and after `build`, under a re-entrant lock, so
+    * no map state is held open across the nested build. A failed build
+    * records nothing and the next call retries it.
+    */
+  private[graft] def scratch(kind: String, d: String)(build: String => Unit): String =
+    scratchDirs.synchronized {
+      val key = s"$kind|$d"
+      scratchDirs.getOrElse(key, {
+        val path = cleanedTempDir(kind) + s"/$kind"
+        build(path)
+        scratchDirs(key) = path
+        path
+      })
+    }
 
   /** Drop every cached scratch artifact (and its files) so the next call
     * rebuilds from source. Bench calls this BETWEEN repeat passes: each
@@ -58,8 +68,8 @@ object SparkEntry {
     * medians stay comparable to past single-shot rounds, and the
     * build-vs-probe split (ann_lsh vs ann_probe) keeps its meaning.
     */
-  private[graft] def resetScratch(): Unit = {
-    scratchDirs.values.forEach(p =>
+  private[graft] def resetScratch(): Unit = scratchDirs.synchronized {
+    scratchDirs.values.foreach(p =>
       rmrf(java.nio.file.Paths.get(p).getParent))
     scratchDirs.clear()
   }
@@ -116,24 +126,6 @@ object SparkEntry {
     scratch("substr_dup_starts", d)(p =>
       TextAnalysis.writeDupWindowStarts(Tables.documents(s, d), p, 8))
 
-  /** Component labels of the bounded brute near-dup graph — the closure
-    * runs ONCE per session and persists (id, cluster_id); the three
-    * governance consumers (verdicts, size histogram, keep-best) re-read
-    * the artifact instead of re-mining edges + re-running the closure.
-    * That is the production split at 100 TB: labels are a lake table,
-    * governance queries are cheap rollups over it.
-    */
-  /** Hashed-shingle parquet artifact of the full corpus — written once
-    * per session (r18-opt), consumed by the minhash near-dup suite
-    * (`minhash_neardup`, `dedup_clusters_lsh`, `neardup_by_source`): the
-    * ngramCcLabels split applied one level down. Before the split each
-    * of the three queries re-tokenized the corpus and re-wrote an
-    * identical artifact; at 100 TB that is the difference between one
-    * corpus tokenize per curation run and one per governance consumer.
-    * Bench semantics unchanged in kind: resetScratch() between passes
-    * still prices exactly one artifact build per pass (the first
-    * consumer pays it, as with the quantile/label artifacts).
-    */
   /** The verified near-dup PAIR LIST over the shingle artifact — mined
     * once per session (r19-opt, the ngramPairsDir precedent one tier
     * up): the two governance consumers (`dedup_clusters_lsh`'s closure,
@@ -149,6 +141,17 @@ object SparkEntry {
       Similarity.minhashNearDupFromArtifact(s, shingleHashesDir(s, d))
         .write.mode("overwrite").parquet(p))
 
+  /** Hashed-shingle parquet artifact of the full corpus — written once
+    * per session (r18-opt), consumed by the minhash near-dup suite
+    * (`minhash_neardup`, `dedup_clusters_lsh`, `neardup_by_source`): the
+    * ngramCcLabels split applied one level down. Before the split each
+    * of the three queries re-tokenized the corpus and re-wrote an
+    * identical artifact; at 100 TB that is the difference between one
+    * corpus tokenize per curation run and one per governance consumer.
+    * Bench semantics unchanged in kind: resetScratch() between passes
+    * still prices exactly one artifact build per pass (the first
+    * consumer pays it, as with the quantile/label artifacts).
+    */
   private def shingleHashesDir(s: SparkSession, d: String): String =
     scratch("minhash_hashes", d)(p =>
       Similarity.shingleHashes(Tables.documents(s, d))
@@ -166,15 +169,6 @@ object SparkEntry {
         .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
         .write.mode("overwrite").parquet(p))
 
-  /** tf-idf feature + suffix-bound prefix artifacts of the bounded
-    * cosine corpus (doc_id < 1000, t = 0.85 — the constants all three
-    * registered consumers share) — written once per session (r18-opt),
-    * read by `cosine_allpairs`, `cosine_preflight` and
-    * `cosine_governed`. Integer-quantized BIGINT columns, so the
-    * parquet round-trip is value-exact. Production story: the feature
-    * table IS the lake artifact a curation run builds once and its
-    * capacity estimator, exact miner and governed router all consume.
-    */
   /** The ONE place the cosine artifact's corpus bound and threshold live
     * (r18 verdict "what's wrong #3"): `pref` is threshold-DEPENDENT (the
     * suffix bound embeds t), so a consumer passing a different t than
@@ -184,6 +178,15 @@ object SparkEntry {
   private val CosineDocBound = 1000L
   private val CosineThreshold = 0.85
 
+  /** tf-idf feature + suffix-bound prefix artifacts of the bounded
+    * cosine corpus (doc_id < 1000, t = 0.85 — the constants all three
+    * registered consumers share) — written once per session (r18-opt),
+    * read by `cosine_allpairs`, `cosine_preflight` and
+    * `cosine_governed`. Integer-quantized BIGINT columns, so the
+    * parquet round-trip is value-exact. Production story: the feature
+    * table IS the lake artifact a curation run builds once and its
+    * capacity estimator, exact miner and governed router all consume.
+    */
   private def cosineFeatsDir(s: SparkSession, d: String): String =
     scratch("cosine_feats", d) { p =>
       val (feats, pref) = Similarity.cosineFeatsAndPrefix(
@@ -232,6 +235,13 @@ object SparkEntry {
       Similarity.ngramJaccard(Tables.documents(s, d), 500L, 0.1)
         .write.mode("overwrite").parquet(p))
 
+  /** Component labels of the bounded brute near-dup graph — the closure
+    * runs ONCE per session and persists (id, cluster_id); the three
+    * governance consumers (verdicts, size histogram, keep-best) re-read
+    * the artifact instead of re-mining edges + re-running the closure.
+    * That is the production split at 100 TB: labels are a lake table,
+    * governance queries are cheap rollups over it.
+    */
   private def ngramCcLabels(s: SparkSession, d: String): DataFrame =
     s.read.parquet(scratch("ngram_cc_labels", d) { p =>
       Clustering.connectedComponents(

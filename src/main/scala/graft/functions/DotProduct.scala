@@ -1,11 +1,14 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import scala.reflect.ClassTag
+
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistryBase
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionDescription, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, BloomFilterMightContain, Expression, ExpressionDescription, ExpressionInfo, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -23,8 +26,7 @@ import org.apache.spark.sql.types._
   * similarity-search hot path: at 100 TB every candidate probe pays this
   * per row.
   *
-  * Registered per-session via [[GraftFunctions.register]] or globally via
-  * `spark.sql.extensions=graft.functions.GraftExtensions`.
+  * Installed with the other graft_* functions by [[GraftExtensions]].
   */
 @ExpressionDescription(
   usage = "graft_dot(a, b) - dot product of two ARRAY<FLOAT> columns as DOUBLE.")
@@ -779,268 +781,95 @@ case class PackedSignBits(child: Expression, planes: Seq[Seq[Double]],
     copy(child = newChild)
 }
 
+/** The graft_* native functions, declared once. [[GraftExtensions]]
+  * installs this table into a session at creation; every graft main
+  * gets it through `graft.GraftSession.tuned`.
+  *
+  * Functions whose arguments are all expressions go through Spark's own
+  * `FunctionRegistryBase.build`: it picks the constructor by arity,
+  * raises `WRONG_NUM_ARGS` naming the function on a mismatch, and reads
+  * the class's `@ExpressionDescription` for `DESCRIBE FUNCTION`. Only
+  * graft_firstmatch and graft_packsig keep hand-written builders: their
+  * trailing arguments are literals baked into the generated code.
+  */
 object GraftFunctions {
 
-  private val dotInfo = new ExpressionInfo(
-    classOf[DotProductFloat].getName, "graft_dot")
-
-  private val dotBuilder: Seq[Expression] => Expression = {
-    case Seq(a, b) => DotProductFloat(a, b)
-    case other => throw new IllegalArgumentException(
-      s"graft_dot takes exactly 2 arguments, got ${other.length}")
+  private def builtBy[T <: Expression : ClassTag](name: String)
+      : (FunctionIdentifier, ExpressionInfo, FunctionBuilder) = {
+    val (info, builder) = FunctionRegistryBase.build[T](name, None)
+    (FunctionIdentifier(name), info, builder)
   }
 
-  private val l2qInfo = new ExpressionInfo(
-    classOf[L2SquaredLong].getName, "graft_l2q")
+  private def handBuilt[T <: Expression : ClassTag](name: String, arity: Int)(
+      build: PartialFunction[Seq[Expression], Expression])
+      : (FunctionIdentifier, ExpressionInfo, FunctionBuilder) =
+    (FunctionIdentifier(name), FunctionRegistryBase.expressionInfo[T](name, None),
+      build.orElse { case other => throw new IllegalArgumentException(
+        s"$name takes exactly $arity arguments, got ${other.length}") })
 
-  private val l2qBuilder: Seq[Expression] => Expression = {
-    case Seq(a, b) => L2SquaredLong(a, b)
+  // INT arguments baked into the generated loop (constant word count,
+  // shift widths) at plan time, so they must be literals
+  private def litInt(fn: String, e: Expression, what: String): Int = e match {
+    case Literal(v: Int, IntegerType) => v
     case other => throw new IllegalArgumentException(
-      s"graft_l2q takes exactly 2 arguments, got ${other.length}")
+      s"$fn: $what must be an INT literal, got $other")
   }
-
-  private val ldotInfo = new ExpressionInfo(
-    classOf[DotProductLong].getName, "graft_ldot")
-
-  private val ldotBuilder: Seq[Expression] => Expression = {
-    case Seq(a, b) => DotProductLong(a, b)
-    case other => throw new IllegalArgumentException(
-      s"graft_ldot takes exactly 2 arguments, got ${other.length}")
-  }
-
-  private val fddotInfo = new ExpressionInfo(
-    classOf[DotProductFloatDouble].getName, "graft_fddot")
-
-  private val fddotBuilder: Seq[Expression] => Expression = {
-    case Seq(a, b) => DotProductFloatDouble(a, b)
-    case other => throw new IllegalArgumentException(
-      s"graft_fddot takes exactly 2 arguments, got ${other.length}")
-  }
-
-  private val firstmatchInfo = new ExpressionInfo(
-    classOf[FirstMatchedGroup].getName, "graft_firstmatch")
-
-  // groupBits / nGroups must be INT literals: they are baked into the
-  // generated loop (constant word count, shift widths) at plan time
-  private def litInt(e: Expression, what: String): Int = e match {
-    case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, IntegerType) => v
-    case other => throw new IllegalArgumentException(
-      s"graft_firstmatch: $what must be an INT literal, got $other")
-  }
-
-  // private[functions]: the GraftExtensions injection path reuses this
-  // builder so both registration routes validate the groupBits/nGroups
-  // literals identically (a BIGINT literal like 3L once raised an opaque
-  // ClassCastException from the extensions path where the registry path
-  // gave litInt's descriptive error)
-  private[functions] val firstmatchBuilder: Seq[Expression] => Expression = {
-    case Seq(a, b, bits, n) =>
-      FirstMatchedGroup(a, b, litInt(bits, "groupBits"), litInt(n, "nGroups"))
-    case other => throw new IllegalArgumentException(
-      s"graft_firstmatch takes exactly 4 arguments, got ${other.length}")
-  }
-
-  private val packsigInfo = new ExpressionInfo(
-    classOf[PackedSignBits].getName, "graft_packsig")
 
   // the plane matrix must be a foldable nested-array DOUBLE literal: it
   // is extracted ONCE here and rides the expression as a flat reference
   // object (never as per-element expression nodes — see PackedSignBits)
   private def litPlanes(e: Expression): Seq[Seq[Double]] = e match {
-    case org.apache.spark.sql.catalyst.expressions.Literal(v: ArrayData,
-        ArrayType(ArrayType(DoubleType, _), _)) =>
+    case Literal(v: ArrayData, ArrayType(ArrayType(DoubleType, _), _)) =>
       (0 until v.numElements()).map(i => v.getArray(i).toDoubleArray().toSeq)
     case other => throw new IllegalArgumentException(
       s"graft_packsig: planes must be an ARRAY<ARRAY<DOUBLE>> literal, got $other")
   }
 
-  private[functions] val packsigBuilder: Seq[Expression] => Expression = {
-    case Seq(emb, pl, bits, n) =>
-      PackedSignBits(emb, litPlanes(pl),
-        litInt(bits, "planesPerTable"), litInt(n, "nTables"))
-    case other => throw new IllegalArgumentException(
-      s"graft_packsig takes exactly 4 arguments, got ${other.length}")
-  }
-
-  private val md5preInfo = new ExpressionInfo(
-    classOf[Md5Prefix].getName, "graft_md5pre")
-
-  private val md5preBuilder: Seq[Expression] => Expression = {
-    case Seq(a, b) => Md5Prefix(a, b)
-    case other => throw new IllegalArgumentException(
-      s"graft_md5pre takes exactly 2 arguments, got ${other.length}")
-  }
-
-  private val md5u32Info = new ExpressionInfo(
-    classOf[Md5Uint32].getName, "graft_md5u32")
-
-  private val md5u32Builder: Seq[Expression] => Expression = {
-    case Seq(s) => Md5Uint32(s)
-    case other => throw new IllegalArgumentException(
-      s"graft_md5u32 takes exactly 1 argument, got ${other.length}")
-  }
-
-  private val sdotInfo = new ExpressionInfo(
-    classOf[SparseDotSorted].getName, "graft_sdot")
-
-  private val sdotBuilder: Seq[Expression] => Expression = {
-    case Seq(a, b) => SparseDotSorted(a, b)
-    case other => throw new IllegalArgumentException(
-      s"graft_sdot takes exactly 2 arguments, got ${other.length}")
-  }
-
-  private val entropyInfo = new ExpressionInfo(
-    classOf[CharEntropyExpr].getName, "graft_entropy")
-
-  private val entropyBuilder: Seq[Expression] => Expression = {
-    case Seq(s) => CharEntropyExpr(s)
-    case other => throw new IllegalArgumentException(
-      s"graft_entropy takes exactly 1 argument, got ${other.length}")
-  }
-
-  private val normalizeInfo = new ExpressionInfo(
-    classOf[NormalizeTextExpr].getName, "graft_normalize")
-
-  private val normalizeBuilder: Seq[Expression] => Expression = {
-    case Seq(s) => NormalizeTextExpr(s)
-    case other => throw new IllegalArgumentException(
-      s"graft_normalize takes exactly 1 argument, got ${other.length}")
-  }
-
-  // Spark ships Bloom-filter expressions for its own runtime row-level
-  // filtering but does NOT register them as SQL functions; exposing them
-  // through the registry gives the dedup tier a standing membership
-  // sketch without writing (or maintaining) a second Bloom implementation.
-  // graft_bloom_agg(xxhash64(k), estItems, numBits) -> BINARY sketch;
-  // graft_might_contain(<binary literal>, xxhash64(k)) -> BOOLEAN
-  // (no false negatives; false positives at the sized fpp).
-  //
-  // VERSION-COUPLING WARNING: BloomFilterAggregate/BloomFilterMightContain
-  // are Spark-INTERNAL catalyst classes (their constructors are not public
-  // API), and the aggregate silently CAPS numItems/numBits at
-  // spark.sql.optimizer.runtime.bloomFilter.maxNumItems/maxNumBits
-  // (defaults 4M items / 67108864 bits). A Spark upgrade or a conf change
-  // can alter the effective fpp with no compile-time or runtime signal —
-  // BloomRegistrySpec pins the sketch's size/no-false-negative contract so
-  // an upgrade breaks a test, not production.
-  private val bloomAggInfo = new ExpressionInfo(
-    classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate].getName,
-    "graft_bloom_agg")
-
-  private val bloomAggBuilder: Seq[Expression] => Expression = {
-    case Seq(child, items, bits) =>
-      new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-        child, items, bits).toAggregateExpression()
-    case other => throw new IllegalArgumentException(
-      s"graft_bloom_agg takes exactly 3 arguments, got ${other.length}")
-  }
-
-  private val mightContainInfo = new ExpressionInfo(
-    classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain].getName,
-    "graft_might_contain")
-
-  private val mightContainBuilder: Seq[Expression] => Expression = {
-    case Seq(bf, v) =>
-      new org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(bf, v)
-    case other => throw new IllegalArgumentException(
-      s"graft_might_contain takes exactly 2 arguments, got ${other.length}")
-  }
-
-  /** Idempotently register graft functions into an existing session. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_dot"), dotInfo, dotBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_l2q"), l2qInfo, l2qBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_ldot"), ldotInfo, ldotBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_fddot"), fddotInfo, fddotBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_firstmatch"), firstmatchInfo, firstmatchBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_packsig"), packsigInfo, packsigBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_md5pre"), md5preInfo, md5preBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_md5u32"), md5u32Info, md5u32Builder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_sdot"), sdotInfo, sdotBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_entropy"), entropyInfo, entropyBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_normalize"), normalizeInfo, normalizeBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_bloom_agg"), bloomAggInfo, bloomAggBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_might_contain"), mightContainInfo, mightContainBuilder)
-  }
+  val all: Seq[(FunctionIdentifier, ExpressionInfo, FunctionBuilder)] = Seq(
+    builtBy[DotProductFloat]("graft_dot"),
+    builtBy[L2SquaredLong]("graft_l2q"),
+    builtBy[DotProductLong]("graft_ldot"),
+    builtBy[DotProductFloatDouble]("graft_fddot"),
+    handBuilt[FirstMatchedGroup]("graft_firstmatch", 4) {
+      case Seq(a, b, bits, n) => FirstMatchedGroup(a, b,
+        litInt("graft_firstmatch", bits, "groupBits"),
+        litInt("graft_firstmatch", n, "nGroups"))
+    },
+    handBuilt[PackedSignBits]("graft_packsig", 4) {
+      case Seq(emb, pl, bits, n) => PackedSignBits(emb, litPlanes(pl),
+        litInt("graft_packsig", bits, "planesPerTable"),
+        litInt("graft_packsig", n, "nTables"))
+    },
+    builtBy[Md5Prefix]("graft_md5pre"),
+    builtBy[Md5Uint32]("graft_md5u32"),
+    builtBy[SparseDotSorted]("graft_sdot"),
+    builtBy[CharEntropyExpr]("graft_entropy"),
+    builtBy[NormalizeTextExpr]("graft_normalize"),
+    // Spark ships Bloom-filter expressions for its own runtime row-level
+    // filtering but does NOT register them as SQL functions; exposing them
+    // through the registry gives the dedup tier a standing membership
+    // sketch without writing (or maintaining) a second Bloom implementation.
+    // graft_bloom_agg(xxhash64(k), estItems, numBits) -> BINARY sketch;
+    // graft_might_contain(<binary literal>, xxhash64(k)) -> BOOLEAN
+    // (no false negatives; false positives at the sized fpp).
+    //
+    // VERSION-COUPLING WARNING: BloomFilterAggregate/BloomFilterMightContain
+    // are Spark-INTERNAL catalyst classes (their constructors are not public
+    // API), and the aggregate silently CAPS numItems/numBits at
+    // spark.sql.optimizer.runtime.bloomFilter.maxNumItems/maxNumBits
+    // (defaults 4M items / 67108864 bits). A Spark upgrade or a conf change
+    // can alter the effective fpp with no compile-time or runtime signal —
+    // BloomRegistrySpec pins the sketch's size/no-false-negative contract so
+    // an upgrade breaks a test, not production.
+    builtBy[BloomFilterAggregate]("graft_bloom_agg"),
+    builtBy[BloomFilterMightContain]("graft_might_contain"))
 }
 
-/** `spark.sql.extensions`-style injection point:
+/** Installs [[GraftFunctions.all]] into a session:
+  * `SparkSession.builder().withExtensions(new GraftExtensions)`, or
   * `--conf spark.sql.extensions=graft.functions.GraftExtensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProductFloat].getName, "graft_dot"),
-      (exprs: Seq[Expression]) => DotProductFloat(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_l2q"),
-      new ExpressionInfo(classOf[L2SquaredLong].getName, "graft_l2q"),
-      (exprs: Seq[Expression]) => L2SquaredLong(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_ldot"),
-      new ExpressionInfo(classOf[DotProductLong].getName, "graft_ldot"),
-      (exprs: Seq[Expression]) => DotProductLong(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_fddot"),
-      new ExpressionInfo(classOf[DotProductFloatDouble].getName, "graft_fddot"),
-      (exprs: Seq[Expression]) => DotProductFloatDouble(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_firstmatch"),
-      new ExpressionInfo(classOf[FirstMatchedGroup].getName, "graft_firstmatch"),
-      GraftFunctions.firstmatchBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_packsig"),
-      new ExpressionInfo(classOf[PackedSignBits].getName, "graft_packsig"),
-      GraftFunctions.packsigBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_md5pre"),
-      new ExpressionInfo(classOf[Md5Prefix].getName, "graft_md5pre"),
-      (exprs: Seq[Expression]) => Md5Prefix(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_md5u32"),
-      new ExpressionInfo(classOf[Md5Uint32].getName, "graft_md5u32"),
-      (exprs: Seq[Expression]) => Md5Uint32(exprs(0))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_sdot"),
-      new ExpressionInfo(classOf[SparseDotSorted].getName, "graft_sdot"),
-      (exprs: Seq[Expression]) => SparseDotSorted(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_entropy"),
-      new ExpressionInfo(classOf[CharEntropyExpr].getName, "graft_entropy"),
-      (exprs: Seq[Expression]) => CharEntropyExpr(exprs(0))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_normalize"),
-      new ExpressionInfo(classOf[NormalizeTextExpr].getName, "graft_normalize"),
-      (exprs: Seq[Expression]) => NormalizeTextExpr(exprs(0))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_bloom_agg"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate].getName,
-        "graft_bloom_agg"),
-      (exprs: Seq[Expression]) =>
-        new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-          exprs(0), exprs(1), exprs(2)).toAggregateExpression()))
-    ext.injectFunction((
-      FunctionIdentifier("graft_might_contain"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain].getName,
-        "graft_might_contain"),
-      (exprs: Seq[Expression]) =>
-        new org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-          exprs(0), exprs(1))))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftFunctions.all.foreach(ext.injectFunction)
 }

@@ -3,8 +3,6 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.GraftFunctions
-
 /** IVF (inverted-file) approximate nearest neighbor — the coarse-quantizer
   * counterpart to the hyperplane-LSH path in [[Similarity]]. Where LSH
   * buckets by random projections (data-independent), IVF learns `nlist`
@@ -109,7 +107,6 @@ object Ivf {
   private def assignCells(embeddings: DataFrame,
                           centroids: Array[Array[Float]],
                           spark: SparkSession): DataFrame = {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val cents = centroids.zipWithIndex
       .map { case (c, i) => (i, c, c.map(v => v.toDouble * v).sum) }
@@ -275,7 +272,6 @@ object Ivf {
 
   def annIvfMd5(embeddings: DataFrame, queryId: Long = 0L, k: Int = 10,
                 nlist: Int = 8, nprobe: Int = 2): DataFrame = {
-    GraftFunctions.register(embeddings.sparkSession)
     import org.apache.spark.sql.Column
     val quant = quantized(embeddings)
     val cents = md5SeedCells(quant, nlist)
@@ -349,7 +345,6 @@ object Ivf {
     * construction.
     */
   def semanticPreflight(embeddings: DataFrame, nlist: Int = 8): DataFrame = {
-    GraftFunctions.register(embeddings.sparkSession)
     val quant = Checkpoints.stable(
       quantized(embeddings).select(col("vec_id"), col("qe")))
     val assigned = md5CellAssign(quant, md5SeedCells(quant, nlist))
@@ -397,7 +392,6 @@ object Ivf {
     */
   def writeSemanticAssign(embeddings: DataFrame, dir: String,
                           nlist: Int = 8): Unit = {
-    GraftFunctions.register(embeddings.sparkSession)
     val quant = Checkpoints.stable(
       quantized(embeddings).select(col("vec_id"), col("qe")))
     md5CellAssign(quant, md5SeedCells(quant, nlist))
@@ -413,7 +407,6 @@ object Ivf {
     */
   def semanticDedupFromAssign(embeddings: DataFrame, assigned: DataFrame,
                               threshold: Double): DataFrame = {
-    GraftFunctions.register(embeddings.sparkSession)
     val cells = embeddings
       .join(assigned, col("vec_id") === col("aid"))
       .select(col("vec_id"), col("cid"), col("embedding"))
@@ -423,7 +416,6 @@ object Ivf {
   /** [[semanticClusters]] over an already-built assignment artifact. */
   def semanticClustersFromAssign(embeddings: DataFrame, assigned: DataFrame,
                                  threshold: Double): DataFrame = {
-    GraftFunctions.register(embeddings.sparkSession)
     val cells = embeddings
       .join(assigned, col("vec_id") === col("aid"))
       .select(col("vec_id"), col("cid"), col("embedding"))
@@ -453,7 +445,6 @@ object Ivf {
     require(maxPairs > 0L && maxPairs < Long.MaxValue,
       "semanticDedupGoverned requires a finite positive budget — for an " +
         "ungoverned flat run call semanticDedup directly")
-    GraftFunctions.register(embeddings.sparkSession)
     val mass = cellPairMass(assigned)
     def decisions(df: DataFrame) =
       df.select(col("vec_id"), col("dup_of"), col("max_cosine"))
@@ -474,7 +465,6 @@ object Ivf {
   def semanticDedup(embeddings: DataFrame, threshold: Double = 0.4,
                     nlist: Int = 8,
                     maxPairs: Long = Long.MaxValue): DataFrame = {
-    GraftFunctions.register(embeddings.sparkSession)
     // Materialized (vec_id, qe): without the cut, the derived transform
     // re-evaluates inside every consumer — seed selection AND each of
     // the ×nlist assignment copies (see [[semanticDedupHierCells]]).
@@ -533,7 +523,6 @@ object Ivf {
     require(maxPairs > 0L && maxPairs < Long.MaxValue,
       "semanticDedupGoverned requires a finite positive budget — for an " +
         "ungoverned flat run call semanticDedup directly")
-    GraftFunctions.register(embeddings.sparkSession)
     val quant = Checkpoints.stable(
       quantized(embeddings).select(col("vec_id"), col("qe")))
     val cut = Checkpoints.stable(
@@ -683,7 +672,6 @@ object Ivf {
     */
   def semanticClusters(embeddings: DataFrame, threshold: Double = 0.4,
                        nlist: Int = 8): DataFrame = {
-    GraftFunctions.register(embeddings.sparkSession)
     val quant = Checkpoints.stable(
       quantized(embeddings).select(col("vec_id"), col("qe")))
     val assigned = md5CellAssign(quant, md5SeedCells(quant, nlist))
@@ -723,7 +711,6 @@ object Ivf {
     */
   private[graft] def semanticDedupHierCells(embeddings: DataFrame,
                                             coarse: Int, fine: Int): DataFrame = {
-    GraftFunctions.register(embeddings.sparkSession)
     // Materialization cuts ([[Checkpoints.stable]]): Spark shares no
     // sub-plan across DataFrame branches, so without them (a) the
     // derived `qe` transform re-evaluates inside every consumer —
@@ -884,7 +871,6 @@ object Ivf {
 
   def annPq(embeddings: DataFrame, queryId: Long = 0L, k: Int = 10,
             m: Int = 8, codes: Int = 16, candidates: Int = 40): DataFrame = {
-    GraftFunctions.register(embeddings.sparkSession)
     val dim = derivedDim(embeddings)
     require(dim % m == 0, s"m=$m must divide dim=$dim")
     val quant = widthChecked(quantized(embeddings), dim, "annPq")
@@ -1003,7 +989,6 @@ object Ivf {
                nlist: Int = 16, lloydRounds: Int = 2,
                m: Int = 8, codes: Int = 32, candidates: Int = 800,
                minProbe: Int = 2, maxScanFrac: Double = 0.75): DataFrame = {
-    GraftFunctions.register(embeddings.sparkSession)
     val dim = derivedDim(embeddings)
     require(dim % m == 0, s"m=$m must divide dim=$dim")
     // Stable-cut (r18-opt): quant feeds ~9 consumers (seed cells, two
@@ -1147,7 +1132,6 @@ object Ivf {
   def ivfProbeCells(spark: SparkSession, layoutDir: String,
                     cells: Seq[Int], qEmb: Array[Float], k: Int,
                     excludeId: Option[Long] = None): DataFrame = {
-    GraftFunctions.register(spark)
     val qNorm2 = qEmb.map(v => v.toDouble * v).sum
     val qCol = array(qEmb.toSeq.map(v => lit(v)): _*)
     def dotF(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =

@@ -184,7 +184,6 @@ object Similarity {
   def dedupIncrementalBloom(newDocs: DataFrame, keysDir: String,
                             expectedItems: Long = 1000000L): DataFrame = {
     val spark = newDocs.sparkSession
-    graft.functions.GraftFunctions.register(spark)
     val seen = spark.read.parquet(keysDir)
     val bloomBytes = seen
       .agg(call_function("graft_bloom_agg", xxhash64(col("k")),
@@ -749,7 +748,6 @@ object Similarity {
     * hash aggregate of 32 bit-vote sums, map-side combined.
     */
   def simhashMd5(documents: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(documents.sparkSession)
     val votes = documents
       .select(col("doc_id"), explode(split(lower(col("text")), " ")).as("t"))
       // graft_md5u32 = conv(substring(md5(t),1,8),16,10)::LONG with a
@@ -775,7 +773,6 @@ object Similarity {
     * Duplicates need no dedup: min() absorbs them.
     */
   def minhashSignaturesMd5(documents: DataFrame, k: Int = 8): DataFrame = {
-    graft.functions.GraftFunctions.register(documents.sparkSession)
     // The salted digest runs as graft_md5pre (one REUSED MessageDigest,
     // raw 16-byte output) and the min aggregates over BINARY — unsigned
     // lexicographic, the same order as the hex string — with the hex
@@ -909,7 +906,7 @@ object Similarity {
 
   // Codegen'd native dot product (graft.functions.DotProductFloat) over
   // the raw float arrays — bit-identical to the cast-then-multiply HOF
-  // form above, ~10x cheaper per row. Requires GraftFunctions.register.
+  // form above, ~10x cheaper per row.
   private def dotF(a: Column, b: Column): Column =
     call_function("graft_dot", a, b)
 
@@ -931,7 +928,6 @@ object Similarity {
     * embedding payload at any point.
     */
   def cosineTopK(embeddings: DataFrame, queryId: Long, k: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     val q = embeddings.filter(col("vec_id") === queryId)
       .select(col("embedding").as("q_emb"))
     embeddings.filter(col("vec_id") =!= queryId)
@@ -968,7 +964,6 @@ object Similarity {
     */
   def dedupEnsembleFromPairs(pairs: DataFrame,
                              embeddings: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     val e = embeddings.select(col("vec_id"), col("embedding"))
     pairs
       .join(e.as("ea"), col("doc_a") === col("ea.vec_id"))
@@ -996,7 +991,6 @@ object Similarity {
     * candidates, same plan either way.
     */
   def cosineTopKBatch(embeddings: DataFrame, queryMod: Long, k: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     val q = embeddings.filter(pmod(col("vec_id"), lit(queryMod)) === 0L)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
     val w = org.apache.spark.sql.expressions.Window
@@ -1038,7 +1032,6 @@ object Similarity {
     */
   def annQuantized(embeddings: DataFrame, queryId: Long, k: Int,
                    rerankFactor: Int = 4): DataFrame = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     val embD = transform(col("embedding"), x => x.cast("double"))
     // Degenerate-corpus guard: an empty or all-zero corpus gives a
     // null/0 absmax, and 127.0/am would then ANSI-throw deep inside the
@@ -1122,7 +1115,6 @@ object Similarity {
 
   def embNearDup(embeddings: DataFrame, threshold: Double,
                  nPlanes: Int = 8, dim: Int = 64): DataFrame = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     val bucketed = embeddings
       .select(col("vec_id"), col("embedding"),
         hyperplaneBucket("embedding", nPlanes, dim).as("bucket"))
@@ -1262,7 +1254,6 @@ object Similarity {
   def embNearDupBanded(embeddings: DataFrame, threshold: Double,
                        nTables: Int, planesPerTable: Int,
                        dim: Int = 64): DataFrame = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     // ONE projection computes all L·r plane dots per row as codegen'd
     // graft_fddot sign bits packed into ⌈L·r/63⌉ signature words — the
     // r15 md5-twin rewrite (192.5→17.9 s same-box at sf1) ported to the
@@ -1413,7 +1404,6 @@ object Similarity {
   def annMd5(embeddings: DataFrame, queryId: Long, k: Int,
              nPlanes: Int = 6, probeRadius: Int = 1,
              dim: Int = 64): DataFrame = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     val bucketed = embeddings
       .withColumn("bucket", md5Bucket("embedding", nPlanes, dim))
     val q = bucketed.filter(col("vec_id") === queryId)
@@ -1433,7 +1423,6 @@ object Similarity {
     */
   def embNearDupMd5(embeddings: DataFrame, threshold: Double,
                     nPlanes: Int = 6, dim: Int = 64): DataFrame = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     val bucketed = embeddings
       .select(col("vec_id"), col("embedding"),
         md5Bucket("embedding", nPlanes, dim).as("bucket"))
@@ -1456,7 +1445,6 @@ object Similarity {
   def embNearDupBandedMd5(embeddings: DataFrame, threshold: Double,
                           nTables: Int = 8, planesPerTable: Int = 3,
                           dim: Int = 64): DataFrame = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     // ONE quantization + nPlanes native integer dots per row, packed via
     // the SHARED [[packedSignature]] layout (8 tables × 3 bits fit one
     // word — the same bit positions the r15 single-long pk used, so
@@ -1493,7 +1481,6 @@ object Similarity {
     */
   def writeAnnLayout(embeddings: DataFrame, layoutDir: String,
                      nPlanes: Int = 4, dim: Int = 64): Unit = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     embeddings.withColumn("bucket", hyperplaneBucket("embedding", nPlanes, dim))
       // cluster by the partition key before the partitioned write: one
       // task owns one bucket, so the layout is one file per bucket
@@ -1531,7 +1518,6 @@ object Similarity {
   def appendToAnnLayout(newVectors: DataFrame, layoutDir: String,
                         nPlanes: Int = 4, dim: Int = 64): DataFrame = {
     val spark = newVectors.sparkSession
-    graft.functions.GraftFunctions.register(spark)
     val path = new org.apache.hadoop.fs.Path(layoutDir)
     val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
     // contract-grade errors, not raw Hadoop stack traces (r17 ADVICE
@@ -1597,7 +1583,6 @@ object Similarity {
                   nPlanes: Int = 4, probeRadius: Int = 1,
                   dim: Int = 64,
                   excludeId: Option[Long] = None): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val qBucket = bucketOf(qEmb, nPlanes, dim)
     val probes = (0L until (1L << nPlanes))
       .filter(m => java.lang.Long.bitCount(m) <= probeRadius)
@@ -1663,7 +1648,6 @@ object Similarity {
                           nPlanes: Int = 6, scanBudget: Double = 0.375,
                           dim: Int = 64,
                           excludeId: Option[Long] = None): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val probes = adaptiveProbeBuckets(qEmb, nPlanes, dim, scanBudget)
     val qCol = array(qEmb.toSeq.map(v => lit(v)): _*)
     val base = spark.read.parquet(layoutDir)
@@ -1736,7 +1720,6 @@ object Similarity {
     // of dim element literals — the per-element form codegens dim
     // assignments per plane and overflows janino's 64 KB method limit
     // at many-plane counts (see embNearDupBanded). Values identical.
-    // Callers must have run GraftFunctions.register on the session.
     val planes = planesArrayAt(startPlane, nPlanes, dim)
     (0 until nPlanes).map { p =>
       when(call_function("graft_fddot", col(embCol),
@@ -1779,7 +1762,6 @@ object Similarity {
     */
   def annLsh(embeddings: DataFrame, queryId: Long, k: Int,
              nPlanes: Int = 4, probeRadius: Int = 1, dim: Int = 64): DataFrame = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     // Hyperplane components are fixed literals baked into the plan
     // (deterministic splitmix64-style mix of (plane, dim) — no RNG state),
     // so bucketing is pure codegen'd arithmetic per row.
@@ -2048,7 +2030,6 @@ object Similarity {
     */
   private def cosineVerifyPairs(cand: DataFrame, feats: DataFrame,
                                 tq: Long, hinted: Boolean = true): DataFrame = {
-    graft.functions.GraftFunctions.register(feats.sparkSession)
     val vecs = feats.groupBy(col("doc_id"))
       .agg(array_sort(collect_list(struct(col("t"), col("wnq")))).as("v"))
     // hinted=false on the artifact faces (r19-opt): `vecs` descends from

@@ -1408,7 +1408,6 @@ object TextAnalysis {
     * At 100 TB this is a pure map over document partitions.
     */
   def charEntropy(documents: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(documents.sparkSession)
     documents.select(
       col("doc_id"),
       length(col("text")).cast("long").as("n_chars_ent"),
@@ -1431,7 +1430,6 @@ object TextAnalysis {
     * copies per row).
     */
   def normalizeText(documents: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(documents.sparkSession)
     documents.select(
       col("doc_id"),
       length(col("text")).cast("long").as("n_chars_raw"),

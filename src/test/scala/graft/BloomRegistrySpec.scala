@@ -2,8 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.GraftFunctions
-
 /** Pins the Spark-internal Bloom expressions behind graft_bloom_agg /
   * graft_might_contain (see DotProduct.scala registration comment).
   *
@@ -23,7 +21,6 @@ class BloomRegistrySpec extends SparkSpec {
   import spark.implicits._
 
   private def sketchOf(keys: Seq[Long], items: Long, bits: Long): Array[Byte] = {
-    GraftFunctions.register(spark)
     keys.toDF("k")
       .agg(call_function("graft_bloom_agg", xxhash64($"k"), lit(items), lit(bits)))
       .head().getAs[Array[Byte]](0)

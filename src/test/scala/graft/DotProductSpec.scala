@@ -2,8 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.GraftFunctions
-
 /** Native codegen'd dot-product expression: parity with the higher-order
   * spelling, null contract, and codegen participation.
   */
@@ -16,7 +14,6 @@ class DotProductSpec extends SparkSpec {
   ).toDF("id", "a", "b")
 
   test("graft_dot equals the aggregate/zip_with spelling bit-for-bit") {
-    GraftFunctions.register(spark)
     val hof = aggregate(
       zip_with(transform($"a", x => x.cast("double")),
         transform($"b", x => x.cast("double")), (x, y) => x * y),
@@ -28,7 +25,6 @@ class DotProductSpec extends SparkSpec {
   }
 
   test("graft_dot: null input yields null; wrong type rejected at analysis") {
-    GraftFunctions.register(spark)
     val withNull = Seq((Some(Seq(1.0f)), Option.empty[Seq[Float]]))
       .toDF("a", "b")
     val out = withNull.select(call_function("graft_dot", $"a", $"b")).collect()
@@ -40,7 +36,6 @@ class DotProductSpec extends SparkSpec {
   }
 
   test("graft_l2q equals the aggregate/zip_with spelling and the hand value") {
-    GraftFunctions.register(spark)
     val df = Seq(
       (Seq(1L, 5L, -3L), Seq(4L, 5L, 7L)),
       (Seq(1048576L, -1048576L), Seq(-1048576L, 1048576L))
@@ -55,7 +50,6 @@ class DotProductSpec extends SparkSpec {
   }
 
   test("graft_l2q: null yields null, wrong type rejected, codegen participation") {
-    GraftFunctions.register(spark)
     val withNull = Seq((Some(Seq(1L)), Option.empty[Seq[Long]])).toDF("a", "b")
     assert(withNull.select(call_function("graft_l2q", $"a", $"b"))
       .collect()(0).isNullAt(0))
@@ -76,7 +70,6 @@ class DotProductSpec extends SparkSpec {
   }
 
   test("graft_dot participates in whole-stage codegen") {
-    GraftFunctions.register(spark)
     // range() is a codegen source (local Seqs collapse to LocalTableScan
     // and would never show a codegen stage).
     val df = spark.range(10)
@@ -91,7 +84,6 @@ class DotProductSpec extends SparkSpec {
   }
 
   test("graft_sdot: sorted-merge sparse dot — hand values, disjoint/empty/null, codegen participation") {
-    graft.functions.GraftFunctions.register(spark)
     def vec(entries: (String, Long)*) =
       array(entries.map { case (t, w) => struct(lit(t).as("t"), lit(w).as("w")) }: _*)
     // shared {b, d}: 2*20 + 5*7 = 75; a-only c/e and b-only f ignored
@@ -142,7 +134,6 @@ class DotProductSpec extends SparkSpec {
   }
 
   test("graft_ldot equals the aggregate/zip_with spelling and the hand value") {
-    GraftFunctions.register(spark)
     val df = Seq(
       (Seq(3L, -2L, 7L), Seq(10L, 100L, -1L)),
       (Seq(0L, 0L, 0L), Seq(1L, 2L, 3L))
@@ -169,7 +160,6 @@ class DotProductSpec extends SparkSpec {
   }
 
   test("graft_md5pre equals unhex(md5(concat)) and min-orders identically") {
-    GraftFunctions.register(spark)
     val df = Seq("alpha beta", "x", "", "ünïcode test").toDF("s")
     val rows = df.select(
       call_function("graft_md5pre", lit("3:"), $"s").as("native"),
@@ -187,7 +177,6 @@ class DotProductSpec extends SparkSpec {
   }
 
   test("graft_md5u32 equals the conv(substring(md5)) spelling over random strings") {
-    GraftFunctions.register(spark)
     val rnd = new scala.util.Random(13)
     val df = ((0 until 100).map(_ => rnd.nextString(rnd.nextInt(12))) ++
       Seq("", "token", "ünïcode")).toDF("t")
@@ -213,7 +202,6 @@ class DotProductSpec extends SparkSpec {
   }
 
   test("graft_md5u32 actually COMPILES in whole-stage codegen (no silent interpreted fallback)") {
-    GraftFunctions.register(spark)
     noFallback {
       val df = spark.range(20)
         .select(call_function("graft_md5u32",
@@ -232,7 +220,6 @@ class DotProductSpec extends SparkSpec {
   }
 
   test("graft_fddot equals the cast-then-multiply HOF spelling bit-for-bit; null + codegen contracts") {
-    GraftFunctions.register(spark)
     // the hyperplane components: 1e-6-grained doubles, NOT float-exact —
     // the reason this expression exists instead of casting planes to float
     val planes = Seq(0.000001, -0.333333, 0.999999)
@@ -270,7 +257,6 @@ class DotProductSpec extends SparkSpec {
   }
 
   test("ragged arrays yield NULL — graft_dot / graft_ldot / graft_l2q / graft_fddot, eval AND codegen") {
-    GraftFunctions.register(spark)
     // the documented HOF equivalence: zip_with null-pads the short side
     // and the null propagates through the sum — a truncated partial dot
     // would put a malformed embedding in a DIFFERENT md5/hyperplane
@@ -302,7 +288,6 @@ class DotProductSpec extends SparkSpec {
   }
 
   test("graft_firstmatch: first agreeing bit-group across packed words — hand cases, ragged null, codegen") {
-    GraftFunctions.register(spark)
     def words(ws: Long*) = array(ws.map(lit(_)): _*)
     // r=3 bits per group, 21 groups/word: groups at offsets 3g
     // x: groups (g0..g3) = 5, 2, 7, 4 ; y: 1, 2, 7, 4 → first match g1
@@ -330,10 +315,18 @@ class DotProductSpec extends SparkSpec {
       call_function("graft_firstmatch", words(1L), words(1L, 2L),
         lit(3), lit(25))).collect()(0) // 25 groups at r=3 needs 2 words
     assert(ragged.isNullAt(0))
-    // non-literal groupBits rejected at plan time
-    intercept[Exception] {
-      spark.range(1).select(call_function("graft_firstmatch",
-        words(1L), words(1L), $"id".cast("int"), lit(1))).collect()
+    // a non-literal INT argument is rejected at plan time, and the error
+    // names the function being built (graft_packsig shares the check)
+    Seq(
+      ("graft_firstmatch", "groupBits",
+        Seq(words(1L), words(1L), $"id".cast("int"), lit(1))),
+      ("graft_packsig", "planesPerTable",
+        Seq(array(lit(1.0f)), typedLit(Seq(Seq(1.0))), $"id".cast("int"), lit(1)))
+    ).foreach { case (fn, arg, args) =>
+      val e = intercept[Exception] {
+        spark.range(1).select(call_function(fn, args: _*)).collect()
+      }
+      assert(e.getMessage.contains(s"$fn: $arg must be an INT literal"), e.getMessage)
     }
     // codegen participation with fallback disabled
     noFallback {
@@ -349,7 +342,6 @@ class DotProductSpec extends SparkSpec {
   }
 
   test("graft_packsig: equals the per-plane fddot composition at the 252-plane sizing (incl. ragged + NaN rows); null -> all-zero; COMPILES in codegen where the composition cannot") {
-    GraftFunctions.register(spark)
     val dim = 64
     val (r, l) = (6, 42) // the sf1 Auto sizing whose composition overflowed 64 KB
     val rnd = new scala.util.Random(13)

@@ -468,7 +468,6 @@ class IvfSpec extends SparkSpec {
   }
 
   test("cellPairs partner-bucket decomposition: a tiny pairTarget (many buckets) reproduces the naive all-pairs result exactly") {
-    graft.functions.GraftFunctions.register(spark)
     val rnd = new scala.util.Random(7)
     // 90 vectors over 3 groups (group sizes 30) so pairTarget = 4 forces
     // nb = 8 buckets per group — deep into the replicated/monotone path.

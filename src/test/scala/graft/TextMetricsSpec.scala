@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.GraftFunctions
 import graft.ops.TextAnalysis
 
 /** Corpus-statistics contracts for the round-11 text metrics: character
@@ -14,7 +13,6 @@ class TextMetricsSpec extends SparkSpec {
   import spark.implicits._
 
   test("graft_entropy: closed-form values, empty string, null contract") {
-    GraftFunctions.register(spark)
     val rows = Seq(
       (0L, "aaaa"),   // one symbol -> 0 bits
       (1L, "ab"),     // two equiprobable -> 1 bit
@@ -37,7 +35,6 @@ class TextMetricsSpec extends SparkSpec {
   }
 
   test("graft_entropy: sum order is value-determined (permuted string, same bits)") {
-    GraftFunctions.register(spark)
     val out = Seq(("xyzzy"), ("zyzxy"), ("yzxzy"))
       .toDF("text")
       .select(call_function("graft_entropy", col("text")).as("h"))
@@ -46,7 +43,6 @@ class TextMetricsSpec extends SparkSpec {
   }
 
   test("graft_normalize: NFC composition, Zs/control cleanup, collapse, trim, idempotence, null") {
-    GraftFunctions.register(spark)
     val rows = Seq(
       (0L, "\t  hello  world    x \n\n"), // full cleanup
       (1L, "café"),              // NFC: e + U+0301 -> U+00E9
